@@ -33,8 +33,6 @@ termination = pending-empty, replacing the 10-empty-polls heuristic
 
 from __future__ import annotations
 
-import os
-import sys
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -45,12 +43,7 @@ from pyspark.sql import functions as F
 
 from .functions.urls import canonicalize_url_col, host_col, path_col, url_hash_col
 from .operators import politeness, traps
-from .operators.dedup import (
-    BloomSeenFilter,
-    CuckooSeenFilter,
-    anti_join_by_hash,
-    dedup_new_urls,
-)
+from .operators.dedup import BloomSeenFilter, anti_join_by_hash, dedup_new_urls
 from .operators.extraction import extract_hrefs, extract_text_col
 from .operators.grouping import emit_extraction_jobs
 from .plans import with_global_seq
@@ -79,12 +72,6 @@ class CrawlConfig:
     default_delay_s: float = 1.0
     global_cap: int | None = None     # optional cap on urls scheduled/iteration
     salt_lanes: int = 8               # host-skew salting for the rank window
-    use_bloom: bool = True
-    # probabilistic seen-set accelerator backend: "bloom" (default) or
-    # "cuckoo" (deletable — supports re-crawl/TTL expiry via remove())
-    seen_filter_kind: str = "bloom"
-    bloom_buckets: int = 64
-    bloom_bits: int = 1 << 17
     # engage the bloom PROBE only once the seen set is worth it; below this the
     # exact anti-join alone is cheaper than an extra Python stage (the probe
     # costs a cogroup pass over every candidate, and its definite-new/maybe
@@ -92,7 +79,6 @@ class CrawlConfig:
     # does not cross the Python cogroup node). Blobs are maintained from
     # iteration 0 either way so engagement is seamless.
     bloom_min_seen: int = 2_000_000
-    emit_jobs: bool = True
     # F7 too-large-group skip (reference: '502' on huge dirs => skip + record,
     # crawlers/globus_base_preserved.py:294-297): families with more members
     # than this are dead-lettered (reason 'family_too_large') instead of
@@ -153,6 +139,18 @@ class CrawlEngine:
         self.spark = spark
         self.config = config or CrawlConfig()
         self.catalog = ManifestCatalog(workdir, spark)
+        # A seeded crawl carries the seen filter's chain from seeding on: the
+        # probe answers "definitely new" for anything the chain lacks, so
+        # resuming a crawl seeded without the filter would re-admit seen urls
+        # silently.
+        if self.catalog.has_commit("crawl_state", "state-iter-0") and not (
+            self.catalog.has_commit(BloomSeenFilter.TABLE, "bloom-iter-0")
+        ):
+            raise ValueError(
+                f"{workdir}: the crawl has a seen set but no complete "
+                f"{BloomSeenFilter.TABLE} chain (written without the Bloom "
+                f"filter); refusing to resume — start a new crawl"
+            )
         # Pre-partition the page store by the join key once and keep it
         # materialized: every iteration's fetch-join then reuses that hash
         # partitioning instead of re-shuffling the (huge) pages side. On a real
@@ -171,29 +169,7 @@ class CrawlEngine:
             # front (in production this partitioning pre-exists as Iceberg
             # bucketing — it must not be re-paid inside every iteration)
             self.pages.count()
-        if not self.config.use_bloom:
-            self.bloom = None
-        elif self.config.seen_filter_kind == "cuckoo":
-            # Sizing (ADVICE r2): capacity must at least cover the probe
-            # engagement point (bloom_min_seen), else every partition overflows
-            # to all-maybe before the filter is ever consulted — safe but
-            # strictly slower than no filter. ~1.10 headroom keeps the load
-            # factor under the ~95% 4-way-cuckoo bound; B is rounded UP to a
-            # power of two (the alternate-bucket XOR walk requires it).
-            want_slots = max(
-                self.config.bloom_bits // 16,  # comparable memory/bucket floor
-                int(1.10 * self.config.bloom_min_seen / self.config.bloom_buckets),
-            )
-            B = 1 << max(0, (max(want_slots // 4, 1) - 1).bit_length())
-            self.bloom = CuckooSeenFilter(
-                self.catalog, n_buckets=self.config.bloom_buckets, n_slots=4 * B
-            )
-        else:
-            self.bloom = BloomSeenFilter(
-                self.catalog,
-                n_buckets=self.config.bloom_buckets,
-                m_bits=self.config.bloom_bits,
-            )
+        self.bloom = BloomSeenFilter(self.catalog)
 
     # ------------------------------------------------------------------ state
     def last_state(self) -> dict | None:
@@ -245,8 +221,7 @@ class CrawlEngine:
                 traps.template_delta(frontier.select("url")),
                 "traps-iter-0", coalesce=1,
             )
-        if self.bloom:
-            self.bloom.update(frontier.select("url"), "bloom-iter-0")
+        self.bloom.update(frontier.select("url"), "bloom-iter-0")
         self.catalog.commit_rows(
             "crawl_state",
             [dict(
@@ -277,14 +252,6 @@ class CrawlEngine:
         r = df.select("crawl_id").limit(1).collect()
         return r[0][0] if r else "crawl-unknown"
 
-    _TRACE = os.environ.get("SPARK_CRAWL_TRACE") == "1"
-
-    def _trace(self, label: str, t0: float) -> float:
-        t = time.monotonic()
-        if self._TRACE:
-            print(f"      [{label}] {t - t0:.2f}s", file=sys.stderr, flush=True)
-        return t
-
     def _commit_observed(
         self, table: str, df: DataFrame, commit_id: str, metrics: dict,
         mode: str = "append", coalesce: int | None = None,
@@ -308,7 +275,6 @@ class CrawlEngine:
     # -------------------------------------------------------------- iteration
     def run_iteration(self, k: int) -> dict:
         t0 = time.monotonic()
-        tp = t0  # trace segment cursor (t0 stays = iteration start)
         cfg = self.config
         prev = f"iter-{k - 1}"
         pending = self.read_pending(k - 1)
@@ -341,7 +307,6 @@ class CrawlEngine:
             .drop("html")
             .localCheckpoint(eager=cfg.eager_checkpoints)  # consumers read blocks
         )
-        tp = self._trace("fetch+extract ckpt", tp) if self._TRACE else tp
         ok = fetched.filter(F.col("fetch_ok"))
         failures = fetched.filter(~F.col("fetch_ok")).select(
             "crawl_id", F.lit(k).alias("iteration"), "url", F.lit("not_found").alias("reason")
@@ -418,7 +383,6 @@ class CrawlEngine:
         # child, which would otherwise evaluate the whole candidate+dedup
         # pipeline a second time (measured as twin full-cost stages).
         new = new.localCheckpoint(eager=cfg.eager_checkpoints)
-        tp = self._trace("cand+dedup ckpt", tp) if self._TRACE else tp
         # with_global_seq pins its own partitioning (localCheckpoint inside);
         # the stamp map is deterministic, so downstream branches may re-run it
         # cheaply off those blocks — no second checkpoint needed.
@@ -432,7 +396,6 @@ class CrawlEngine:
             *[c for c in FRONTIER_COLS if c != "discovered_iter"],
             F.lit(k).alias("discovered_iter"),
         ).localCheckpoint(eager=cfg.eager_checkpoints)  # stamp map runs once, 4 consumers share
-        tp = self._trace("seq+stamp ckpt", tp) if self._TRACE else tp
 
         # Frontier delta-commit vs compaction (decided from the PREVIOUS
         # state so the concurrent commits don't wait on each other's counts):
@@ -449,7 +412,7 @@ class CrawlEngine:
         )
 
         # ---- commits; counters observed on the write actions themselves.
-        # The eight table commits are mutually independent (all read the two
+        # The nine table commits are mutually independent (all read the two
         # pinned checkpoints), so they run as CONCURRENT Spark jobs — the
         # wall cost is the slowest commit, not the sum. Only the crawl_state
         # checkpoint row must come strictly last. Idempotence is per-table
@@ -457,7 +420,6 @@ class CrawlEngine:
         # resumes exactly (partially-committed iterations re-run and skip
         # finished commits).
         it = f"iter-{k}"
-        tt = self._trace("pre(total)", t0)
 
         def c_order():
             return self._commit_observed(
@@ -482,8 +444,6 @@ class CrawlEngine:
             self.catalog.commit("fetch_failures", failures, f"fail-{it}", coalesce=cfg.commit_files)
 
         def c_jobs():
-            if not cfg.emit_jobs:
-                return {"n_fams": 0}
             jobs = emit_extraction_jobs(ok.select("crawl_id", "url", "seq", "size"), k)
             if cfg.max_family_files is not None:
                 oversize = F.size("files") > cfg.max_family_files
@@ -511,8 +471,7 @@ class CrawlEngine:
             )
 
         def c_bloom():
-            if self.bloom:
-                self.bloom.update(new_frontier.select("url"), f"bloom-{it}", upto=f"bloom-{prev}")
+            self.bloom.update(new_frontier.select("url"), f"bloom-{it}", upto=f"bloom-{prev}")
 
         def c_pend():
             if compact:
@@ -590,7 +549,6 @@ class CrawlEngine:
             futs["bloom"].result()
             futs["tomb"].result()
             futs["traps"].result()
-        tt = self._trace("commits(concurrent)", tt)
         n_sched, n_ok = int(m_order["n_sched"]), int(m_pages["n_ok"])
         n_new = int(m_seen["n_new"])
         # live pending is exact arithmetic (scheduled rows always come from
@@ -635,12 +593,11 @@ class CrawlEngine:
           seqs (scheduled exactly once on resume). The seen set keeps their
           rows, so links to them keep deduping — no double-crawl.
         - ``mode="forget"``: expired urls are deleted from the seen table
-          (hash-keyed anti-join rewrite) and their fingerprints removed from
-          the cuckoo filter — the deletable backend's reason to exist; the
-          bloom backend cannot delete, so its stale bits just cost extra
-          exact lookups (safe direction). The url is re-crawled when some
-          future page links to it, admitted exactly once by the standard
-          dedup invariant.
+          (hash-keyed anti-join rewrite). The Bloom filter cannot delete, so
+          it only gets an empty anchor commit; the stale bits flag the urls
+          maybe-seen and the exact anti-join re-admits them. The url is
+          re-crawled when some future page links to it, admitted exactly
+          once by the standard dedup invariant.
 
         Unknown urls (never seen) are ignored. Returns counters.
         """
@@ -687,17 +644,12 @@ class CrawlEngine:
                 ).repartition(1),
                 f"seen-{it}",
             )
-            if self.bloom:
-                self.bloom.update(ex.select("url").limit(0), f"bloom-{it}", upto=f"bloom-{prev}")
         else:  # forget
             kept = anti_join_by_hash(seen, ex.select("url_hash", "url"))
             self.catalog.commit("seen", kept, f"seen-{it}", mode="overwrite")
             n_exp = 0  # forget adds nothing to pending
-            if isinstance(self.bloom, CuckooSeenFilter):
-                self.bloom.remove(ex.select("url"), f"bloom-{it}", upto=f"bloom-{prev}")
-            elif self.bloom:
-                # bloom cannot delete; keep the commit chain anchored
-                self.bloom.update(ex.select("url").limit(0), f"bloom-{it}", upto=f"bloom-{prev}")
+        # neither mode adds to the filter; keep its commit chain anchored
+        self.bloom.update(ex.select("url").limit(0), f"bloom-{it}", upto=f"bloom-{prev}")
         if mode == "forget":
             self.catalog.commit(
                 "frontier_pending",

@@ -79,92 +79,13 @@ def test_incremental_update_across_commits(spark, catalog):
     assert flagged.filter(~F.col("maybe_seen")).count() == 0
 
 
-# --------------------------------------------------------------------------- #
-# cuckoo filter (the deletable seen-set accelerator)
-# --------------------------------------------------------------------------- #
-
-
-def test_cuckoo_no_false_negatives_and_low_fp(spark, catalog):
-    from crawler_service_spark.operators.dedup import CuckooSeenFilter
-
-    ck = CuckooSeenFilter(catalog, n_buckets=8, n_slots=1 << 12)
-    ck.update(urls_df(spark, SEEN_URLS), "ck-1")
-    flagged = ck.flag_maybe_seen(urls_df(spark, SEEN_URLS + NEW_URLS))
-    got = {r["url"]: r["maybe_seen"] for r in flagged.collect()}
-    assert all(got[u] for u in SEEN_URLS), "cuckoo must never produce a false negative"
-    fp = sum(got[u] for u in NEW_URLS) / len(NEW_URLS)
-    assert fp < 0.05, f"false-positive rate {fp:.2%} unexpectedly high"
-
-
-def test_cuckoo_remove_supports_recrawl(spark, catalog):
-    """Deletion — the capability Bloom lacks: removed URLs flag definitely-new
-    again while everything else stays seen (modulo fingerprint collisions,
-    which only flip toward maybe, never toward lost)."""
-    from crawler_service_spark.operators.dedup import CuckooSeenFilter
-
-    ck = CuckooSeenFilter(catalog, n_buckets=8, n_slots=1 << 12)
-    ck.update(urls_df(spark, SEEN_URLS), "ck-1")
-    expired = SEEN_URLS[:40]
-    ck.remove(urls_df(spark, expired), "ck-2", upto="ck-1")
-    got = {
-        r["url"]: r["maybe_seen"]
-        for r in ck.flag_maybe_seen(urls_df(spark, SEEN_URLS), upto="ck-2").collect()
-    }
-    # removed urls may only stay 'maybe' via a fingerprint collision: rare
-    still_flagged = sum(got[u] for u in expired)
-    assert still_flagged <= 2, f"{still_flagged}/40 removed urls still flagged"
-    kept = [u for u in SEEN_URLS[40:]]
-    assert all(got[u] for u in kept), "non-removed urls must remain seen"
-
-
-def test_cuckoo_dedup_integration_equals_exact(spark, catalog):
-    from crawler_service_spark.operators.dedup import CuckooSeenFilter
-
-    ck = CuckooSeenFilter(catalog, n_buckets=8, n_slots=1 << 12)
-    ck.update(urls_df(spark, SEEN_URLS), "ck-1")
-    seen = urls_df(spark, SEEN_URLS)
-    cand = urls_df(spark, SEEN_URLS[:50] + NEW_URLS)
-    got = sorted(
-        r["url"] for r in dedup_new_urls(cand, seen, ck, bloom_upto="ck-1").collect()
-    )
-    assert got == sorted(NEW_URLS)
-
-
-def test_cuckoo_overflow_degrades_safe(spark, catalog):
-    """A deliberately tiny table overflows; the partition degrades to
-    all-maybe — extra exact lookups, never a lost URL."""
-    from crawler_service_spark.operators.dedup import CuckooSeenFilter
-
-    ck = CuckooSeenFilter(catalog, n_buckets=1, n_slots=64)  # 64 slots, 300 urls
-    ck.update(urls_df(spark, SEEN_URLS), "ck-1")
-    flagged = ck.flag_maybe_seen(urls_df(spark, SEEN_URLS))
-    assert all(r["maybe_seen"] for r in flagged.collect())
-
-
-def test_crawl_with_cuckoo_backend_matches_oracle(spark, tiny_fixture, tmp_path):
-    """Full crawl with the cuckoo accelerator engaged from iteration 0
-    produces the identical crawl to the exact/bloom paths."""
-    import sys
-
-    from crawler_service_spark.engine import CrawlConfig, CrawlEngine
-
-    sys.path.insert(0, "/root/repo/tests")
-    from conftest import engine_snapshot
-
-    snaps = []
-    for name, kind in [("bloom", "bloom"), ("cuckoo", "cuckoo")]:
-        eng = CrawlEngine(
-            spark,
-            spark.read.parquet(tiny_fixture["pages"]),
-            spark.read.parquet(tiny_fixture["robots_rules"]),
-            str(tmp_path / name),
-            CrawlConfig(
-                iteration_seconds=60.0, bloom_min_seen=0, seen_filter_kind=kind
-            ),
-        )
-        eng.run(seeds=spark.read.parquet(tiny_fixture["seeds"]))
-        snaps.append(engine_snapshot(eng))
-    assert snaps[0] == snaps[1]
+def test_dedup_with_no_filter_snapshot_stays_exact(spark, catalog):
+    """A filter with no committed snapshot proves nothing: every candidate
+    must fall through to the exact anti-join, never pass as definitely new."""
+    seen = urls_df(spark, SEEN_URLS[:30])
+    cand = urls_df(spark, SEEN_URLS[:30] + NEW_URLS[:10])
+    out = dedup_new_urls(cand, seen, BloomSeenFilter(catalog))
+    assert sorted(r["url"] for r in out.collect()) == sorted(NEW_URLS[:10])
 
 
 def _commit_bytes(catalog, table):
@@ -199,16 +120,11 @@ def test_filter_delta_commit_bytes_scale_with_batch(spark, catalog):
     assert flagged.filter(~F.col("maybe_seen")).count() == 0
 
 
-@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+@pytest.mark.parametrize("kind", ["bloom"])
 def test_filter_compaction_fold_equivalence(spark, catalog, kind):
     """After compact_every deltas the chain folds into base blobs (one
     overwrite commit); probes across the fold boundary are identical."""
-    from crawler_service_spark.operators.dedup import CuckooSeenFilter
-
-    if kind == "bloom":
-        f = BloomSeenFilter(catalog, n_buckets=4, m_bits=1 << 14, compact_every=2)
-    else:
-        f = CuckooSeenFilter(catalog, n_buckets=4, n_slots=1 << 12, compact_every=2)
+    f = BloomSeenFilter(catalog, n_buckets=4, m_bits=1 << 14, compact_every=2)
     chunks = [SEEN_URLS[i::4] for i in range(4)]
     prev = None
     for i, chunk in enumerate(chunks):
@@ -225,62 +141,3 @@ def test_filter_compaction_fold_equivalence(spark, catalog, kind):
     # pre-compaction snapshots still replay the delta chain untouched
     early = f.flag_maybe_seen(urls_df(spark, chunks[0]), upto="c-0")
     assert early.filter(~F.col("maybe_seen")).count() == 0
-
-
-def test_cuckoo_blob_model_property():
-    """Model-based check of the blob-level cuckoo ops (pure numpy, no Spark):
-    against a multiset model, after any interleaving of inserts and deletes
-    there is NEVER a false negative, and deletes only remove present items."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from crawler_service_spark.operators.dedup import (
-        _ck_decode,
-        _ck_encode,
-        _ck_fp_i1_i2,
-        _ck_insert_all,
-    )
-
-    B = 64  # 256 slots
-
-    def hashes(key: int):
-        h1 = np.array([hash(("h1", key)) & 0x7FFFFFFFFFFFFFFF], dtype=np.int64)
-        h2 = np.array([hash(("h2", key)) & 0x7FFFFFFFFFFFFFFF], dtype=np.int64)
-        return _ck_fp_i1_i2(h1, h2, B)
-
-    @settings(max_examples=30, deadline=None)
-    @given(
-        st.lists(
-            st.tuples(st.sampled_from(["add", "del"]), st.integers(0, 40)),
-            min_size=1, max_size=120,
-        )
-    )
-    def run(ops):
-        slots, overflow = _ck_decode(None, B)
-        model: dict[int, int] = {}
-        for op, key in ops:
-            fp, i1, i2 = hashes(key)
-            if op == "add":
-                overflow = _ck_insert_all(slots, fp, i1, i2, B) or overflow
-                model[key] = model.get(key, 0) + 1
-            elif model.get(key, 0) > 0:
-                for bucket in (int(i1[0]), int(i2[0])):
-                    hit = np.flatnonzero(slots[bucket] == fp[0])
-                    if len(hit):
-                        slots[bucket, hit[0]] = 0
-                        break
-                model[key] -= 1
-        # round-trip through encoding
-        slots2, overflow2 = _ck_decode(_ck_encode(slots, overflow), B)
-        assert (slots2 == slots).all() and overflow2 == overflow
-        if not overflow:
-            for key, cnt in model.items():
-                if cnt > 0:
-                    fp, i1, i2 = hashes(key)
-                    present = (slots[int(i1[0])] == fp[0]).any() or (
-                        slots[int(i2[0])] == fp[0]
-                    ).any()
-                    assert present, f"false negative for key {key}"
-
-    run()

@@ -6,7 +6,7 @@ resume() keep working untouched:
 - recrawl: expired urls re-enter the frontier with fresh seqs and are
   re-scheduled EXACTLY once; the seen set keeps their rows so links to them
   keep deduping (no double-crawl).
-- forget: seen rows deleted + cuckoo fingerprints removed; the url is
+- forget: seen rows deleted (the Bloom filter keeps its bits); the url is
   re-admitted exactly once by the standard dedup invariant when next linked.
 """
 
@@ -28,12 +28,9 @@ def _build(spark, fixture, workdir, **cfg):
     )
 
 
-@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+@pytest.mark.parametrize("kind", ["bloom"])
 def test_expire_recrawl_exactly_once(spark, tiny_fixture, tmp_path, kind):
-    eng = _build(
-        spark, tiny_fixture, tmp_path / kind,
-        bloom_min_seen=0, seen_filter_kind=kind,
-    )
+    eng = _build(spark, tiny_fixture, tmp_path / kind, bloom_min_seen=0)
     eng.run(seeds=spark.read.parquet(tiny_fixture["seeds"]))
     st0 = eng.last_state()
     assert st0["status"] == "complete"
@@ -66,13 +63,10 @@ def test_expire_recrawl_exactly_once(spark, tiny_fixture, tmp_path, kind):
     assert seen_counts.filter("n > 1").count() == 0
 
 
-def test_expire_forget_cuckoo_readmits_exactly_once(spark, tiny_fixture, tmp_path):
+def test_expire_forget_readmits_exactly_once(spark, tiny_fixture, tmp_path):
     from crawler_service_spark.operators.dedup import dedup_new_urls
 
-    eng = _build(
-        spark, tiny_fixture, tmp_path / "forget",
-        bloom_min_seen=0, seen_filter_kind="cuckoo",
-    )
+    eng = _build(spark, tiny_fixture, tmp_path / "forget", bloom_min_seen=0)
     eng.run(seeds=spark.read.parquet(tiny_fixture["seeds"]))
     k = int(eng.last_state()["iteration"])
     all_seen = sorted(r["url"] for r in eng.catalog.read("seen").select("url").collect())
@@ -86,14 +80,12 @@ def test_expire_forget_cuckoo_readmits_exactly_once(spark, tiny_fixture, tmp_pat
     left = sorted(r["url"] for r in seen_after.select("url").collect())
     assert left == [u for u in all_seen if u not in expired]
 
-    # the deletable filter actually forgot them: probing the expired urls
-    # flags definitely-new (modulo rare fp collisions), so a future link
-    # re-admits them through the normal dedup path exactly once
+    # the filter still holds their bits, so the probe flags them maybe-seen
+    # and the exact anti-join against the rewritten seen set re-admits them
+    # through the normal dedup path exactly once
     from crawler_service_spark.functions.urls import url_hash_col
 
     cand = ex_df.withColumn("url_hash", url_hash_col("url"))
-    flagged = eng.bloom.flag_maybe_seen(cand, upto=f"bloom-iter-{k + 1}")
-    assert flagged.filter(F.col("maybe_seen")).count() <= 1
     admitted = dedup_new_urls(
         cand, seen_after, eng.bloom, bloom_upto=f"bloom-iter-{k + 1}"
     )

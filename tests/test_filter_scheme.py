@@ -1,7 +1,7 @@
-"""Position-scheme marker on the persisted seen filters (SURVEY.md §5.2).
+"""Position-scheme marker on the persisted seen filter (SURVEY.md §5.2).
 
 Delta rows persist raw (h1, h2) hashes — portable across probe-scheme
-changes — but compacted base blobs bake bit/slot POSITIONS into bytes. A
+changes — but compacted base blobs bake bit POSITIONS into bytes. A
 blob folded under one scheme and probed under another false-negatives
 silently, and ``maybe_seen=False`` skips the exact anti-join: the one
 failure direction the filter contract forbids. The catalog marker makes
@@ -22,7 +22,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from crawler_service_spark.operators.dedup import BloomSeenFilter, CuckooSeenFilter
+from crawler_service_spark.operators.dedup import BloomSeenFilter
 from crawler_service_spark.storage import ManifestCatalog
 
 SEEN = [f"https://h{i % 5}.example.com/seen/{i}" for i in range(80)]
@@ -100,20 +100,3 @@ def test_mismatched_scheme_refused(spark, catalog):
         bloom.flag_maybe_seen(urls_df(spark, SEEN)).count()
     with pytest.raises(ValueError, match="not portable across schemes"):
         bloom.update(urls_df(spark, NEW), "b1")
-
-
-def test_cuckoo_guard_and_lifecycle(spark, catalog):
-    ck = CuckooSeenFilter(catalog, n_buckets=2, n_slots=1 << 10, compact_every=1)
-    ck.update(urls_df(spark, SEEN[:40]), "c0")
-    assert catalog.read_marker(ck.TABLE, "position-scheme") == ck.SCHEME
-    ck.update(urls_df(spark, SEEN[40:]), "c1")  # fold -> slot-layout blobs
-    assert ck.flag_maybe_seen(urls_df(spark, SEEN)) \
-        .filter(~F.col("maybe_seen")).count() == 0
-
-    os.remove(marker_path(catalog, ck.TABLE))
-    with pytest.raises(ValueError, match="predate the position-scheme marker"):
-        ck.flag_maybe_seen(urls_df(spark, SEEN)).count()
-
-    catalog.write_marker(ck.TABLE, "position-scheme", "cuckoo-slot-v1")
-    with pytest.raises(ValueError, match="not portable across schemes"):
-        ck.update(urls_df(spark, NEW), "c2")

@@ -86,3 +86,16 @@ def test_resume_on_complete_is_noop(spark, tiny_fixture, tmp_path_factory, unint
     before = engine_snapshot(eng)
     assert eng.resume() == []
     assert engine_snapshot(eng) == before == uninterrupted
+
+
+def test_resume_refuses_crawl_without_seen_filter(spark, tiny_fixture, tmp_path_factory):
+    """A crawl whose seen set has no filter chain behind it (written by a
+    build that could turn the filter off or swap its table) is refused:
+    resuming it would flag seen urls definitely-new and re-admit them."""
+    wd = tmp_path_factory.mktemp("wd-nofilter")
+    eng = make_engine(spark, tiny_fixture, wd)
+    eng.run(seeds=spark.read.parquet(tiny_fixture["seeds"]), max_iterations=1)
+    eng.catalog.drop("seen_filters")
+
+    with pytest.raises(ValueError, match="seen_filters"):
+        make_engine(spark, tiny_fixture, wd)

@@ -1,11 +1,11 @@
-"""Measure the probabilistic seen-filter PROBE engaged (VERDICT r3 item 4).
+"""Measure the Bloom seen-filter PROBE engaged (VERDICT r3 item 4).
 
 Every recorded bench so far ran below ``bloom_min_seen`` (2M), so the probe's
 claimed win was asserted, never measured. This tool runs the saturated-frontier
 crawl (the 586k-URL sf0.1 fixture, seen set populated at seeding time) with the
-probe FORCED on (``bloom_min_seen=0``) for both backends, against the exact
-anti-join baseline (``use_bloom=False``), best-of-2 interleaved per cell at
-local[8].
+probe FORCED on (``bloom_min_seen=0``) against the exact anti-join alone (the
+default ``bloom_min_seen``, above the fixture's 586k seen URLs), best-of-2
+interleaved per cell at local[8].
 
 What the probe changes: candidate link dedup (engine fetch loop) routes
 "definitely new" URLs around the exact seen anti-join; only "maybe seen"
@@ -28,9 +28,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import bench
 
 CELLS = {
-    "exact_only": {"use_bloom": False},
-    "bloom_probe": {"use_bloom": True, "seen_filter_kind": "bloom", "bloom_min_seen": 0},
-    "cuckoo_probe": {"use_bloom": True, "seen_filter_kind": "cuckoo", "bloom_min_seen": 0},
+    "exact_only": {},
+    "bloom_probe": {"bloom_min_seen": 0},
 }
 
 
